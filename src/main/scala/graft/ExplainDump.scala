@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `.explain("formatted")` for declared entries to files — the
@@ -16,14 +16,7 @@ object ExplainDump {
     val suffix = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(default = 32))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if names.contains(name)) {

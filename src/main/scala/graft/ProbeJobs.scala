@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Job-level timing probe for one declared entry: runs the entry under
@@ -13,14 +13,7 @@ object ProbeJobs {
     val entry = args(0)
     val reps = if (args.length > 1) args(1).toInt else 1
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus(default = 32))
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
@@ -49,11 +42,10 @@ object ProbeJobs {
       }
     })
     val fn = SparkEntry.queries(entry)
-    for (r <- 1 to reps) {
+    for (r <- 1 to reps) Harness.sweeping(spark, spareShared = false) {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[entry $entry rep $r] ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      spark.sparkContext.getPersistentRDDs.foreach(_._2.unpersist(true))
     }
     spark.stop()
     sys.exit(0)

@@ -3,8 +3,8 @@ package graft
 /** Registry of persistent-RDD ids that back SESSION-SCOPED shared
   * frames — materialized intermediates an operator family deliberately
   * shares across entry invocations within one process (the multimodal
-  * decode is the first user). Harness cleanups (Bench's per-entry
-  * leaked-persist sweep) consult this registry GENERICALLY instead of
+  * decode is the first user). [[Harness.sweeping]] (Bench's per-entry
+  * leaked-persist sweep) consults this registry GENERICALLY instead of
   * special-casing any entry family: a registered id is spared, an
   * unregistered leak is released as before. Verify deliberately does
   * NOT consult it — its per-entry sweep releases shared frames too, so

@@ -840,19 +840,11 @@ object Text {
     * after the round). Scale shape: corpus-linear word count ONCE,
     * then per round one vocabulary-bounded aggregation + two bounded
     * collects; the vocabulary frame is LOCALCHECKPOINTED each round so
-    * pass k's PLAN holds only its own ≤cap merges — caching the data
-    * alone (persist) leaves the quadratic-growing logical plan for AQE
-    * to re-stringify on every job (the C52/§8 lineage discipline,
+    * pass k's PLAN holds only its own ≤[[BpeBatchCap]] merges — caching
+    * the data alone (persist) leaves the quadratic-growing logical plan
+    * for AQE to re-stringify on every job (the C52/§8 lineage discipline,
     * measured as minutes of driver CPU inside explainString). */
-  def bpeLearnBatched(documents: DataFrame): DataFrame =
-    bpeLearnBatchedWith(documents, BpeBatchRounds, BpeBatchTopC, BpeBatchCap)
-
-  /** [[bpeLearnBatched]] with the knobs as parameters — the gate entry
-    * pins the constants (the oracle unrolls exactly that many rounds);
-    * the depth PROBE ([[graft.ProbeBpeDepth]]) runs the same learner at
-    * production merge budgets. */
-  private[graft] def bpeLearnBatchedWith(documents: DataFrame,
-      rounds: Int, topC: Int, cap: Int): DataFrame = {
+  def bpeLearnBatched(documents: DataFrame): DataFrame = {
     import documents.sparkSession.implicits._
     val wc = documents
       .select(explode(split(lower(col("text")), "[ \t\n\r]+")).as("w"))
@@ -866,7 +858,7 @@ object Text {
     try {
       val out = Seq.newBuilder[(Long, Long, String, String, Long, Long)]
       var rank = 0L
-      for (k <- 1 to rounds) {
+      for (k <- 1 to BpeBatchRounds) {
         val cand = cur
           .withColumn("parts", filter(split(col("s"), BD),
             x => length(x) > 0))
@@ -877,10 +869,10 @@ object Text {
           .groupBy(col("p.l").as("lft"), col("p.r").as("rgt"))
           .agg(sum(col("cnt")).as("c"))
           .orderBy(col("c").desc, col("lft"), col("rgt"))
-          .limit(topC)
-          .collect() // bounded: the candidate pool, ≤ topC rows
+          .limit(BpeBatchTopC)
+          .collect() // bounded: the candidate pool, ≤ BpeBatchTopC rows
           .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
-        val accepted = bpeGreedySelect(cand, cap)
+        val accepted = bpeGreedySelect(cand, BpeBatchCap)
         var sc = col("s")
         accepted.foreach { case (l, r, _) =>
           val pat = lit(BD + l + BD + r + BD)
@@ -895,8 +887,8 @@ object Text {
         // the plan to an RDD scan, so round k's plan holds only ITS
         // merges (§8).
         // r18 opt: the per-round token count RIDES the checkpoint
-        // action via Observation (the C55 witness pattern, probed in
-        // ProbeObserve/ProbeObserveWindow) — one driver job per round
+        // action via Observation (the C55 witness pattern, pinned by
+        // ObservationSpec) — one driver job per round
         // instead of checkpoint + a separate 1-row scan. A timeout
         // degrades to the scanned count (same value, one extra job).
         val obs = org.apache.spark.sql.Observation(s"bpeb_toks_$k")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min, Sum}
-import org.apache.spark.sql.connector.expressions.NamedReference
+import org.apache.spark.sql.connector.expressions.{Expression, NamedReference}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.graft.ArrowBridge
 import org.apache.spark.sql.sources.Filter
@@ -173,10 +173,13 @@ class GraftArrowScanBuilder(endpoint: Endpoint, table: String,
   // divergence is recorded in SURVEY §2/A4.
   override def supportCompletePushDown(aggregation: Aggregation): Boolean = false
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    def colName(refs: Array[NamedReference]): Option[String] =
-      refs.headOption.collect {
-        case r if r.fieldNames().length == 1 => r.fieldNames()(0)
-      }
+    // an aggregate pushes only over a plain single-name column: its
+    // argument must BE the reference, not merely contain one —
+    // sum(l_quantity * 2) is not sum(l_quantity)
+    def colName(arg: Expression): Option[String] = arg match {
+      case r: NamedReference if r.fieldNames().length == 1 => Some(r.fieldNames()(0))
+      case _ => None
+    }
     // group-by columns: plain single-name references over groupable
     // types only; anything fancier (expressions, nested fields)
     // declines the whole pushdown
@@ -188,11 +191,11 @@ class GraftArrowScanBuilder(endpoint: Endpoint, table: String,
     val calls = aggregation.aggregateExpressions().toSeq.map {
       case _: CountStar => Some(AggCall("count_star", ""))
       case c: Count if !c.isDistinct =>
-        colName(c.column.references()).map(AggCall("count", _))
+        colName(c.column).map(AggCall("count", _))
       case s: Sum if !s.isDistinct =>
-        colName(s.column.references()).map(AggCall("sum", _))
-      case m: Min => colName(m.column.references()).map(AggCall("min", _))
-      case m: Max => colName(m.column.references()).map(AggCall("max", _))
+        colName(s.column).map(AggCall("sum", _))
+      case m: Min => colName(m.column).map(AggCall("min", _))
+      case m: Max => colName(m.column).map(AggCall("max", _))
       case _ => None // AVG, COUNT(DISTINCT), UDAFs… ⇒ whole query local
     }
     if (calls.exists(_.isEmpty)) return false

@@ -333,6 +333,20 @@ class GraftArrowSpec extends SparkSpec {
     assert(df.head === expected)
   }
 
+  test("aggregates over an expression stay local and match the native reader (A4)") {
+    // an aggregate whose argument merely CONTAINS a column must not be
+    // pushed as an aggregate of that column
+    Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+      _.agg(sum(col("l_quantity") * 2).as("v")),
+      _.agg(min(concat(col("l_returnflag"), col("l_linestatus"))).as("v"))
+    ).foreach { q =>
+      val df = q(arrow("lineitem"))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("PushedAggregates"), s"expression aggregate pushed:\n$plan")
+      assert(df.head === q(plain("lineitem")).head)
+    }
+  }
+
   test("AVG pushes as decomposed SUM+COUNT; grouped aggs push partials per group (A4+)") {
     // the reference computes AVG locally in split mode; Spark goes one
     // better and decomposes it into pushable SUM+COUNT partials
